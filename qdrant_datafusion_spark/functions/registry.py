@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
+from qdrant_datafusion_spark.session import session_cached
+
 
 def _dense_batch(v: pd.Series, q: pd.Series, kernel) -> pd.Series:
     """Run a dense pairwise kernel over an Arrow batch WITHOUT a per-row
@@ -189,21 +191,13 @@ def _maxsim_batch(mv: pd.Series, q: pd.Series) -> pd.Series:
     return res
 
 
-#: sessions already registered (identity-checked): registration is
-#: idempotent (CREATE OR REPLACE + udf.register), but each call parses
-#: ~20 DDL statements and re-wraps 7 Python UDFs — ~0.3s of driver-side
-#: work per call (guide §7.3).  Holding the session object keeps its
-#: id() from being reused by a successor session.
-_REGISTERED_SESSIONS: list[SparkSession] = []
-
-
+@session_cached
 def register_all(spark: SparkSession) -> None:
     """Install SQL-callable versions of the V_* surface on this session.
 
-    Idempotent and memoized per live session — repeat calls on a session
-    that already has the surface installed are a no-op."""
-    if any(s is spark for s in _REGISTERED_SESSIONS):
-        return
+    Idempotent, and runs once per session: registration parses ~20 DDL
+    statements and re-wraps 7 Python UDFs — ~0.3s of driver-side work per
+    call (guide §7.3) — so repeat calls on the same session are no-ops."""
 
     @pandas_udf("double")
     def v_cosine(v: pd.Series, q: pd.Series) -> pd.Series:
@@ -282,7 +276,6 @@ def register_all(spark: SparkSession) -> None:
     # is pure built-in expression, so all of these inline into the plan
     for ddl in _SQL_FUNCTION_DDL:
         spark.sql(ddl)
-    _REGISTERED_SESSIONS.append(spark)
 
 
 #: SQL-defined functions completing the corpus's SQL-callable surface

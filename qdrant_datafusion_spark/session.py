@@ -19,7 +19,9 @@ written so the same code runs unchanged on a real cluster:
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -117,6 +119,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: The one session-scoped build cache: the session it was filled for and
+#: its entries, keyed on (builder, args).  A single slot — a call from any
+#: other session object empties it first, so nothing built for a dead
+#: session outlives the switch.  Emptying does not release
+#: localCheckpoint pins; they are freed when their SparkContext stops.
+_cache_session: SparkSession | None = None
+_cache: dict[tuple, object] = {}
+#: reentrant: a build may call other cached builders of its session
+_cache_lock = threading.RLock()
+
+
+def session_cached(build):
+    """Memoize ``build(spark, *args)`` on ``(build, args)`` for the current
+    session.  Shared builds (eagerly pinned tables, trained models,
+    per-session registration) run once per session; a different session
+    object evicts every entry before building.  ``None`` results are
+    cached like any other value."""
+
+    @functools.wraps(build)
+    def cached(spark, *args):
+        global _cache_session
+        with _cache_lock:
+            if spark is not _cache_session:
+                _cache.clear()
+                _cache_session = spark
+            key = (build, args)
+            if key not in _cache:
+                _cache[key] = build(spark, *args)
+            return _cache[key]
+
+    return cached
 
 
 def fan_out(df, *key_cols: str, min_parts: int | None = None, parts: int | None = None):
